@@ -1,7 +1,12 @@
 package graft.agg
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalRows
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 
 /** Shared sort-based EXACT multi-quantile — the 100-TB replacement for
   * funneling whole groups through [[graft.expr.ExactPercentile]]'s
@@ -19,13 +24,13 @@ import org.apache.spark.sql.functions._
   *      TPC-H-ish schema — collapse to tiny cell sets; genuinely
   *      continuous columns degrade to one range-sort of n rows, the
   *      q_corr_spearman cost bound);
-  *   3. RangeCum range-sorts the cells by value within (keys, request)
-  *      and emits running counts plus (free, from its pass-1 driver
-  *      fold) the per-group totals n;
-  *   4. for each requested p the two covering order statistics are
-  *      picked in ONE streaming aggregate (rank = p·(n−1), a value v
-  *      covers position t iff cum ≥ t and cum − count < t), and the
-  *      pair interpolates exactly like ExactPercentile:
+  *   3. RangeCum range-sorts the cells by value within (keys, request);
+  *      its pass 1 yields each group's total n on the driver, which turns
+  *      every requested p into the two covering positions
+  *      ⌊p·(n−1)⌋+1 and min(⌊p·(n−1)⌋+2, n);
+  *   4. RangeCum's pass 2 emits only the cells covering those positions
+  *      (at most 2·|ps| per group) and collects them; the driver
+  *      interpolates exactly like ExactPercentile:
   *      pos = p·(n−1); frac = pos − ⌊pos⌋; frac == 0 → lo, else
   *      lo + (hi − lo)·frac — BIT-IDENTICAL (SortedQuantilesSpec pins
   *      doubleToLongBits parity against the buffering aggregate).
@@ -42,14 +47,14 @@ import org.apache.spark.sql.functions._
   *     (a groupBy+agg would emit it with null arrays) — in-engine
   *     callers that need the full group universe left-join from it
   *     (see Clean.calcFences);
-  *   - null KEY values form groups, as in groupBy (null-safe join
-  *     internally).
+  *   - null KEY values form groups, as in groupBy.
   *
-  * EAGER: RangeCum's pass 1 runs Spark jobs at call time, so building
-  * the returned plan already costs the sort pass even if the caller
-  * never executes it. The totals frame is O(#groups × #requests) rows
-  * and is broadcast — group cardinality must be broadcast-sized (true
-  * for every in-engine caller: global or low-cardinality strata).
+  * EAGER: both passes run at call time and the result is a driver-local
+  * relation (one row per group), so reading, collecting or broadcast-
+  * joining it launches no further job. The driver holds O(#groups ×
+  * #requests × |ps|) entries, refused past `maxDriverEntries` before
+  * pass 2 runs — group cardinality must be driver-sized (true for every
+  * in-engine caller: global or low-cardinality strata).
   */
 object SortedQuantiles {
 
@@ -92,7 +97,8 @@ object SortedQuantiles {
     * counts fold straight off the value cell counts) skip re-scanning
     * the corpus entirely. Same output/parity contract as [[of]]. */
   private[graft] def ofCounts(cells: DataFrame, keys: Seq[String],
-                              reqs: Seq[Req]): DataFrame = {
+                              reqs: Seq[Req],
+                              maxDriverEntries: Int = 4000000): DataFrame = {
     require(reqs.nonEmpty, "SortedQuantiles: no requests")
     reqs.foreach { r =>
       require(r.ps.nonEmpty, s"SortedQuantiles: request ${r.name} has no ps")
@@ -101,9 +107,7 @@ object SortedQuantiles {
     }
     require(reqs.map(_.name).distinct.size == reqs.size,
       "SortedQuantiles: request names must be distinct")
-    val kcols = keys.map(col)
-
-    // 3. running + total counts in value order within (keys, request).
+    val nk = keys.length
     // NOTE the cell frame is executed twice here (the range exchange's
     // boundary sampling runs its child once more than the shuffle
     // write) — a caller whose cells are expensive or reused downstream
@@ -112,59 +116,39 @@ object SortedQuantiles {
     // NET-NEGATIVE for one-shot callers with near-continuous columns
     // (q_fence_cap 3.4 → 9.1 s at 100×: materializing a ~10M-cell cache
     // costs more than re-running the codegen melt+fold).
-    val (cum, totals, nKeys) = graft.util.RangeCum.cumSumWithTotalsN(
-      cells, keys :+ "__qc", "__v", Seq("__c"))
-
-    // broadcast the (tiny) totals back onto the cell stream; null-safe
-    // on the key columns — null strata are groups. Past the broadcast
-    // key ceiling, fall back to a shuffle join (memory-safe)
-    val groupKeys = keys :+ "__qc"
-    val tot = totals
-      .withColumnRenamed("__tot___c", "__n")
-    val totRenamed = groupKeys.foldLeft(tot)((d, k) =>
-      d.withColumnRenamed(k, s"__t_$k"))
-    val joinCond = groupKeys.map(k =>
-      cum(k) <=> totRenamed(s"__t_$k")).reduce(_ && _)
-    val totSide = if (nKeys <= graft.util.RangeCum.MaxBroadcastKeys)
-      broadcast(totRenamed) else totRenamed
-    val joined = cum.join(totSide, joinCond)
-      .drop(groupKeys.map(k => s"__t_$k"): _*)
-
-    // 4. covering order statistics for the UNION of requested ps, one
-    // streaming aggregate per (keys, request) group
-    val allPs = reqs.flatMap(_.ps).distinct
-    val psIdx = allPs.zipWithIndex.toMap
-    val picks = allPs.zipWithIndex.flatMap { case (p, i) =>
-      val r = lit(p) * (col("__n") - 1) // rank, 0-based (p·(n−1))
-      val loPos = floor(r) + 1          // covering positions, 1-based
-      val hiPos = least(floor(r) + 2, col("__n"))
-      def covering(pos: Column) = when(
-        col("__cum___c") >= pos && col("__cum___c") - col("__c") < pos,
-        col("__v"))
-      Seq(min(covering(loPos)).as(s"__lo_$i"),
-        min(covering(hiPos)).as(s"__hi_$i"))
-    } :+ first(col("__n")).as("__n")
-    val perReq = joined.groupBy((kcols :+ col("__qc")): _*)
-      .agg(picks.head, picks.tail: _*)
+    // Covering positions (1-based) of every p come from n on the driver,
+    // in the double/long arithmetic Spark's floor/least use.
+    val picked = graft.util.RangeCum.coveringValues(cells, keys :+ "__qc",
+      "__v", "__c", (k, n) => reqs(k(nk).asInstanceOf[Int]).ps.toArray
+        .flatMap { p =>
+          val lo = math.floor(p * (n - 1)).toLong + 1
+          Array(lo, math.min(lo + 1, n.toLong))
+        }, maxDriverEntries)
 
     // interpolate exactly as ExactPercentile.eval: integral rank short-
-    // circuits to the lower statistic (lo == hi there), else linear
-    val valued = allPs.zipWithIndex.foldLeft(perReq) { case (d, (p, i)) =>
-      val r = lit(p) * (col("__n") - 1)
-      val frac = r - floor(r)
-      d.withColumn(s"__val_$i",
-        when(frac === 0.0, col(s"__lo_$i"))
-          .otherwise(col(s"__lo_$i") +
-            (col(s"__hi_$i") - col(s"__lo_$i")) * frac))
+    // circuits to the lower statistic, else linear
+    val groups = scala.collection.mutable.LinkedHashMap
+      .empty[Seq[Any], Array[Any]]
+    picked.foreach { case (k, (n, at)) =>
+      val vals = reqs(k(nk).asInstanceOf[Int]).ps.map { p =>
+        val r = p * (n - 1)
+        val fl = math.floor(r).toLong
+        val frac = r - fl
+        val lo = at(fl + 1)
+        if (frac == 0.0) lo else lo + (at(fl + 2) - lo) * frac
+      }
+      groups.getOrElseUpdate(k.take(nk), new Array[Any](reqs.size))(
+        k(nk).asInstanceOf[Int]) = new GenericArrayData(vals.toArray[Any])
     }
-
-    // 5. pivot back: one row per key group, one array column per request
-    val outAggs = reqs.zipWithIndex.map { case (rq, j) =>
-      first(when(col("__qc") === j,
-          array(rq.ps.map(p => col(s"__val_${psIdx(p)}")): _*)),
-        ignoreNulls = true).as(rq.name)
-    }
-    valued.groupBy(kcols: _*).agg(outAggs.head, outAggs.tail: _*)
+    // a global request over no values still yields one (all-null) row,
+    // as a global aggregate does
+    if (keys.isEmpty && groups.isEmpty)
+      groups(Nil) = new Array[Any](reqs.size)
+    val schema = StructType(keys.map(cells.schema(_)) ++ reqs.map(r =>
+      StructField(r.name, ArrayType(DoubleType, containsNull = true))))
+    InternalRows.localDF(cells.sparkSession, groups.map { case (k, arrs) =>
+      new GenericInternalRow((k ++ arrs).toArray): InternalRow
+    }.toSeq, schema)
   }
 
   /** Convenience: single global (no keys) request → the quantile array

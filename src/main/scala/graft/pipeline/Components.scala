@@ -225,10 +225,11 @@ object Components {
     * a DRIVER-LOCAL relation so its broadcast build launches no job.
     * The batch itself is collected once (it is batch-bounded by
     * contract: the touched/affected sets it feeds had to fit a driver
-    * broadcast at the same magnitude anyway — `maxDriverBatch` makes
-    * the bound loud), the touched-id set folds on the driver, and the
-    * affected component ids come back from ONE semi-join job over
-    * `labels`. The previous formulation re-derived `touched` and
+    * broadcast at the same magnitude anyway — the collect stops at
+    * `maxDriverBatch` + 1 pairs, and a batch past the cap fails loudly
+    * before the driver holds more), the touched-id set folds on the
+    * driver, and the affected component ids come back from ONE
+    * semi-join job over `labels`. The previous formulation re-derived `touched` and
     * `affected` as lazy broadcast subtrees, so every action re-ran
     * their broadcast-build jobs and re-scanned `labels` (~8 sequential
     * small jobs per fold — pure fixed overhead at any scale). The
@@ -244,14 +245,17 @@ object Components {
       graft.util.Errors.context("updateComponents", Seq(aCol, bCol)) {
     val spark = labels.sparkSession
     import spark.implicits._
-    // ONE job: the batch generator runs exactly once and the pairs land
-    // on the driver (same null/NPE semantics as the local CC tier's
-    // as[(Long, Long)] collect)
+    // at most maxDriverBatch + 1 pairs land on the driver, so an
+    // oversized batch fails at the cap instead of materializing first
+    // (same null/NPE semantics as the local CC tier's as[(Long, Long)]
+    // collect)
     val batch = newPairs.select(col(aCol).cast("long"),
-      col(bCol).cast("long")).as[(Long, Long)].collect()
+      col(bCol).cast("long")).as[(Long, Long)]
+      .limit(math.min(maxDriverBatch.toLong + 1, Int.MaxValue).toInt)
+      .collect()
     require(batch.length <= maxDriverBatch,
-      s"updateComponents: batch of ${batch.length} pairs exceeds " +
-        s"maxDriverBatch=$maxDriverBatch — fold smaller batches, or raise " +
+      s"updateComponents: batch has more than maxDriverBatch=" +
+        s"$maxDriverBatch pairs — fold smaller batches, or raise " +
         "the cap if the driver really has the memory")
     // driver fold: distinct touched ids (no distinct shuffle, no job)
     val touchedIds = {

@@ -3,7 +3,10 @@ package org.apache.spark.sql.graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset,
+  SparkSession => ClassicSession}
 import org.apache.spark.sql.types.StructType
 
 /** Minimal `private[sql]` bridge: build a DataFrame straight from an
@@ -25,10 +28,21 @@ import org.apache.spark.sql.types.StructType
   */
 object InternalRows {
   def toDF(spark: SparkSession, rdd: RDD[InternalRow],
-           schema: StructType): DataFrame = spark match {
-    case classic: ClassicSession => classic.internalCreateDataFrame(rdd, schema)
+           schema: StructType): DataFrame =
+    classic(spark).internalCreateDataFrame(rdd, schema)
+
+  /** Driver-held rows as a `LocalRelation`: scanning it, collecting it or
+    * broadcasting it launches no Spark job. Same row contract as
+    * [[toDF]]; the rows must be immutable (they are kept, not copied). */
+  def localDF(spark: SparkSession, rows: Seq[InternalRow],
+              schema: StructType): DataFrame =
+    ClassicDataset.ofRows(classic(spark),
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  private def classic(spark: SparkSession): ClassicSession = spark match {
+    case c: ClassicSession => c
     case other => throw new IllegalStateException(
-      s"InternalRows.toDF needs a classic (JVM-local) SparkSession — got " +
+      s"InternalRows needs a classic (JVM-local) SparkSession — got " +
         s"${other.getClass.getName}; the InternalRow bridge cannot run " +
         "under Spark Connect")
   }

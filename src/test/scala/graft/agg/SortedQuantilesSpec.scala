@@ -133,4 +133,94 @@ class SortedQuantilesSpec extends SparkSpec {
     }
     assertSameRows(a, b, Seq("s"))
   }
+
+  // the covering pick: pass 2 emits only the cells covering each group's
+  // target positions, so the shapes below aim targets at partition
+  // boundaries, shared cells and null keys
+
+  /** Range partitions `cells`' (keys, request) groups land in, per group. */
+  private def partitionsPerGroup(df: DataFrame, keys: Seq[String]): Long = {
+    val cells = SortedQuantiles.cellsOf(df, keys,
+      Seq(SortedQuantiles.Req("__q", col("v"), Seq(0.5))))
+    graft.util.RangeCum.cumSum(cells, keys :+ "__qc", "__v", Seq("__c"))
+      .withColumn("__pid", spark_partition_id())
+      .groupBy((keys :+ "__qc").map(col): _*)
+      .agg(countDistinct("__pid").as("np"))
+      .agg(min("np")).head().getLong(0)
+  }
+
+  test("groups spanning several range partitions: bit-identical") {
+    import sc2.implicits._
+    val rnd = new scala.util.Random(7)
+    val df = (for (k <- Seq("a", "b"); _ <- 1 to 1500)
+      yield (k, rnd.nextGaussian())).toDF("k", "v")
+    assert(partitionsPerGroup(df, Seq("k")) > 1,
+      "every group must span range partitions")
+    val many = (0 to 40).map(_ / 40.0) :+ (1.0 / 3.0)
+    assertSameRows(Stats.percentileExact(df, Seq("v"), many, Seq("k")),
+      Stats.percentileExactBuffered(df, Seq("v"), many, Seq("k")), Seq("k"))
+  }
+
+  test("every position a target, so each partition's first cell is one") {
+    import sc2.implicits._
+    // n distinct values and ps = i/(n−1): every 1-based position is a
+    // covering target, including the first cell of every range partition
+    val n = 301
+    val df = (1 to n).map(i => (i * 7919 % 1000).toDouble).toDF("v")
+    assert(partitionsPerGroup(df, Nil) > 1)
+    val every = (0 until n).map(_.toDouble / (n - 1))
+    assertSameRows(Stats.percentileExact(df, Seq("v"), every),
+      Stats.percentileExactBuffered(df, Seq("v"), every), Nil)
+  }
+
+  test("heavy ties: one cell covering both lo and hi positions") {
+    import sc2.implicits._
+    // 997 copies of 5.0 between two singletons: every interior p has a
+    // fractional rank whose lo and hi positions fall in the same cell
+    val df = ((Seq(-1.0) ++ Seq.fill(997)(5.0) :+ 9.0).map(v => ("x", v)) ++
+      Seq(("y", 2.0), ("y", 2.0))).toDF("k", "v")
+    val tiePs = Seq(0.0, 0.001, 0.3, 2.0 / 3.0, 0.999, 1.0)
+    assertSameRows(Stats.percentileExact(df, Seq("v"), tiePs, Seq("k")),
+      Stats.percentileExactBuffered(df, Seq("v"), tiePs, Seq("k")), Seq("k"))
+  }
+
+  test("null key groups, alone and beside non-null keys: bit-identical") {
+    import sc2.implicits._
+    val rnd = new scala.util.Random(11)
+    val ks = Array[String]("p", "q", null)
+    val df = (1 to 3000).map { _ =>
+      (ks(rnd.nextInt(3)), ks(rnd.nextInt(3)),
+        if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(50).toDouble))
+    }.toDF("k1", "k2", "v")
+    assertSameRows(Stats.percentileExact(df, Seq("v"), ps, Seq("k1", "k2")),
+      Stats.percentileExactBuffered(df, Seq("v"), ps, Seq("k1", "k2")),
+      Seq("k1", "k2"))
+  }
+
+  test("globalArray runs at most 6 jobs") {
+    val (got, jobs) = graft.JobCount(spark) {
+      SortedQuantiles.globalArray(messy, col("cont"), Seq(0.1, 0.25, 0.5, 0.75, 0.9))
+    }
+    assert(got.isDefined)
+    assert(jobs <= 6, s"globalArray ran $jobs jobs")
+  }
+
+  test("the covering-cell budget refuses before pass 2 collects") {
+    val reqs = Seq(SortedQuantiles.Req("__q", col("cont"), Seq(0.1, 0.3, 0.7, 0.9)))
+    val cells = SortedQuantiles.cellsOf(messy, Nil, reqs)
+    // pass 1 holds at most one subtotal per range partition (4 here);
+    // the 4 fractional ps need 8 covering cells
+    val (_, okJobs) = graft.JobCount(spark) {
+      SortedQuantiles.ofCounts(cells, Nil, reqs, maxDriverEntries = 8)
+    }
+    val (e, refusedJobs) = graft.JobCount(spark) {
+      intercept[IllegalArgumentException] {
+        SortedQuantiles.ofCounts(cells, Nil, reqs, maxDriverEntries = 7)
+      }
+    }
+    assert(e.getMessage.contains("covering cells"), e.getMessage)
+    assert(refusedJobs == okJobs - 1,
+      s"the refused call ran $refusedJobs jobs, the accepted one $okJobs: " +
+        "exactly the pass-2 collect must be skipped")
+  }
 }

@@ -171,26 +171,18 @@ class ComponentsSpec extends SparkSpec {
     // fold + action at sf0.1 (13 + 7); the fused one 15 (11 + 4). Bound
     // generously (local tier here is cheaper than the sf0.1 probe) so the
     // spec survives scheduler-detail drift but still catches a return to
-    // per-action broadcast re-derivation.
+    // per-action broadcast re-derivation. Only jobs in the call's own job
+    // group count, read after the listener bus drains.
     import spark.implicits._
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     val base = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
     val labels = Components.connectedComponents(base)
     labels.count() // settle the standing labeling before counting
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val batch = Seq((3L, 10L), (30L, 31L)).toDF("id_a", "id_b")
-      val upd = Components.updateComponents(labels, batch)
-      upd.orderBy("id").collect()
-      Thread.sleep(1000) // listener bus is async
-      assert(jobs.get() <= 16, s"updateComponents fold+action ran " +
-        s"${jobs.get()} jobs — the fused shape runs well under 16")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val batch = Seq((3L, 10L), (30L, 31L)).toDF("id_a", "id_b")
+    val (_, jobs) = graft.JobCount(spark) {
+      Components.updateComponents(labels, batch).orderBy("id").collect()
+    }
+    assert(jobs <= 16, s"updateComponents fold+action ran $jobs jobs — " +
+      "the fused shape runs well under 16")
   }
 
   test("empty pair frame yields empty components and a no-op dedup") {

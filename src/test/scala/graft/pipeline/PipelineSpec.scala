@@ -930,6 +930,14 @@ class PipelineSpec extends SparkSpec {
       3L -> ((1L, other.length.toLong))))
   }
 
+  test("syntheticPngMemo: memoized seeds still hit once the memo is full") {
+    val first = Multimodal.syntheticPngMemo(0L, 3, 3)
+    (1L to 4200L).foreach(s => Multimodal.syntheticPngMemo(s, 3, 3)) // fill
+    assert(Multimodal.syntheticPngMemo(0L, 3, 3) eq first)
+    val late = Multimodal.syntheticPngMemo(5000L, 3, 3) // past the cap
+    assert(late.sameElements(Multimodal.syntheticPng(5000L, 3, 3)))
+  }
+
   test("ImageIOCodec decodes synthetic PNG exactly; unknown payloads fall back") {
     import spark.implicits._
     val df = Seq((7L, Multimodal.syntheticPng(7L)), (8L, Array[Byte](1, 2, 3)))
